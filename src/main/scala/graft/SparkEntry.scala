@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Quality
+import graft.ops.{Quality, Reconcile}
 import graft.pipelines.{CustomerSalesReport, ProductPerformance, ReconcileQueries, SupplierPerformance}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -29,12 +29,12 @@ object SparkEntry {
     "dup_check" -> ((s, dir) => Quality.duplicates(
       graft.model.Entities.read(s, dir, "lineitem"), Seq("l_orderkey"))),
     // Q2-Q7 Raptor reconciliation surface
-    "reconcile_row_diff" -> ((s, dir) => ReconcileQueries.rowDiff(s, dir)),
-    "reconcile_col_mismatch" -> ((s, dir) => ReconcileQueries.colMismatch(s, dir)),
-    "reconcile_src_extra" -> ((s, dir) => ReconcileQueries.srcExtra(s, dir)),
-    "reconcile_tgt_extra" -> ((s, dir) => ReconcileQueries.tgtExtra(s, dir)),
-    "reconcile_summary" -> ((s, dir) => ReconcileQueries.summary(s, dir)),
-    "reconcile_col_summary" -> ((s, dir) => ReconcileQueries.colSummary(s, dir)),
+    "reconcile_row_diff" -> ReconcileQueries.cell(Reconcile.rowDiff),
+    "reconcile_col_mismatch" -> ReconcileQueries.cell(Reconcile.colMismatch),
+    "reconcile_src_extra" -> ReconcileQueries.cell(Reconcile.srcExtra),
+    "reconcile_tgt_extra" -> ReconcileQueries.cell(Reconcile.tgtExtra),
+    "reconcile_summary" -> ReconcileQueries.cell(Reconcile.summary),
+    "reconcile_col_summary" -> ReconcileQueries.cell(Reconcile.colSummary),
   )
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -1,13 +1,16 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Sink connectors — reference §2.1 S7, S8, S10.
   *
   * Scale posture: parquet writes inherit the frame's partitioning — callers
   * control file count via the upstream plan (repartition by the write key),
-  * never via driver-side collects. `snapshot` applies the reference's
-  * raw-overwrite + legacy-append convention in one call.
+  * never via driver-side collects. `land` applies the reference's
+  * raw-overwrite + legacy-append convention from one execution of a plan.
   */
 object Sinks {
 
@@ -87,9 +90,34 @@ object Sinks {
 
   /** The reference's snapshot-ledger convention (`ingestion_task.py:66-69`
     * and parallels): the current frame overwrites `raw`, and the same frame
-    * appends to the `legacy` history — a hand-rolled SCD-0 daily ledger. */
-  def snapshot(df: DataFrame, rawPath: String, legacyPath: String): Unit = {
-    parquet(df, rawPath, SaveMode.Overwrite)
-    parquet(df, legacyPath, SaveMode.Append)
+    * appends to the `legacy` history — a hand-rolled SCD-0 daily ledger —
+    * through [[land]], from one execution of the frame's plan. */
+  def snapshot(df: DataFrame, rawPath: String, legacyPath: String): Unit =
+    land(df, rawPath, legacyPath)
+
+  /** Gate, snapshot and count `df` from one execution of its plan; returns
+    * the rows landed. It writes `df` once, to a staging directory next to
+    * `raw`, gates `primaryKey` (if any) over the staged files and counts
+    * their parquet footers, appends them to `legacy`, then renames the stage
+    * over `raw`. A failed gate or write leaves `raw` and `legacy` untouched. */
+  def land(df: DataFrame, rawPath: String, legacyPath: String,
+           primaryKey: Seq[String] = Nil): Long = {
+    val raw = new Path(rawPath)
+    val fs = raw.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val stage = new Path(raw.getParent, s".stage-${raw.getName}-${java.util.UUID.randomUUID}")
+    try {
+      df.write.parquet(stage.toString)
+      val staged = df.sparkSession.read.schema(df.schema).parquet(stage.toString)
+      if (primaryKey.nonEmpty) graft.ops.Quality.gate(staged, primaryKey)
+      val rows = fs.listStatus(stage).filter(f => f.isFile && !f.getPath.getName.matches("[._].*"))
+        .map { f =>
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, fs.getConf))
+          try r.getRecordCount finally r.close()
+        }.sum
+      staged.write.mode(SaveMode.Append).parquet(legacyPath)
+      fs.delete(raw, true)
+      if (!fs.rename(stage, raw)) throw new java.io.IOException(s"cannot rename $stage to $raw")
+      rows
+    } finally fs.delete(stage, true)
   }
 }

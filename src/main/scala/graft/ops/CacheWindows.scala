@@ -45,24 +45,22 @@ private[graft] final class CacheWindows(maxPerSession: Int) {
     * would unpersist the entry the other still relies on (measured: the
     * two benched linkage queries share their corpus-index plan, and
     * slot-per-alias made each query's passes evict the other's live
-    * cache). The refreshed frame is returned unpersisted — its action
+    * cache). The refreshed frame is not persisted again — its action
     * still hits the cached entry, because cache lookup is by plan, not
-    * by DataFrame identity. */
+    * by DataFrame identity — unless the entry was dropped behind the
+    * window's back (`catalog.clearCache()`, a foreign `unpersist`): then
+    * the plan is persisted anew instead of recomputing on every action. */
   def add(df: DataFrame): DataFrame = synchronized {
     val w = windows.computeIfAbsent(df.sparkSession,
       _ => new scala.collection.mutable.ArrayDeque[DataFrame]())
     val plan = df.queryExecution.analyzed
     val existing = w.indexWhere(_.queryExecution.analyzed.sameResult(plan))
-    if (existing >= 0) {
-      val entry = w.remove(existing)
-      w.append(entry) // LRU refresh: this plan is hot again
-      df
-    } else {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      w.append(p)
-      while (w.length > maxPerSession) w.removeHead().unpersist(blocking = false)
-      p
-    }
+    if (existing >= 0) w.remove(existing) // LRU refresh: this plan is hot again
+    val p =
+      if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    w.append(p)
+    while (w.length > maxPerSession) w.removeHead().unpersist(blocking = false)
+    p
   }
 
   /** Unpersist and forget every frame registered by `spark`'s window;

@@ -456,7 +456,7 @@ object Dedup {
     // dominates the whole query. The cached form is the COMPACT one
     // (id + 8-byte hash array, no text), MEMORY_AND_DISK so blocks are
     // evictable/spillable under pressure and recomputed on miss — the
-    // same posture as [[Reconcile.diff]]'s source/target cache.
+    // same posture as [[Reconcile.diff]]'s compare-frame cache.
     // Residency across calls is bounded by [[registerShingleCache]].
     // shingle hashing is a per-character CPU pass (the passageWins
     // pathology): widen a single-split scan so the hash — and every

@@ -28,7 +28,7 @@ object Quality {
 
   /** Throws [[DuplicateException]] when `df` has duplicate primary keys;
     * otherwise returns `df` unchanged so the gate composes with a write:
-    * `Sinks.append(Quality.gate(df, keys), ...)`. */
+    * `Sinks.parquet(Quality.gate(df, keys), ...)`. */
   def gate(df: DataFrame, primaryKey: Seq[String]): DataFrame = {
     if (!duplicates(df, primaryKey).isEmpty)
       throw new DuplicateException(

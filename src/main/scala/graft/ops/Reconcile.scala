@@ -20,13 +20,13 @@ import org.apache.spark.sql.functions._
   *   - Extra rows = outer join + null-side filter both directions (`:619-645`).
   *
   * Better physics than the reference, same results (SURVEY.md §4
-  * anti-pattern 4): the summary is ONE aggregation over ONE full-outer
-  * join instead of the reference's six separate join+count actions, and it
-  * stays a lazy DataFrame (no driver-side count storm). At 100 TB that is
-  * one shuffle by the key columns instead of six.
+  * anti-pattern 4): ONE full-outer join of the erased sides yields per row
+  * the keys, a state (equal, mismatch, source-only, target-only) and record
+  * strings; all six artifacts filter or aggregate it, and [[diff]] persists
+  * it instead of both sides — one shuffle by key instead of six joins.
   *
   * Assumes keys are unique per side (the reference's dup gate runs
-  * upstream); with duplicate keys the inner joins would fan out in both
+  * upstream); with duplicate keys the joins would fan out in both
   * engines identically, but summary counts lose their plain-English meaning.
   */
 object Reconcile {
@@ -36,54 +36,57 @@ object Reconcile {
 
   /** Cast every column to string, null→'', and append a concatenated
     * record column — the reference's canonicalization (`Raptor.py:550-569`). */
-  def canonicalize(df: DataFrame, keys: Seq[String], recordCol: String): DataFrame = {
-    val cols = df.columns.toSeq
-    df.select(cols.map(c => col(c).cast("string").as(c)): _*)
-      .na.fill("")
-      .withColumn(recordCol, concat_ws(Sep, cols.map(col): _*))
-      .select((keys.map(col) :+ col(recordCol)): _*)
-  }
+  def canonicalize(df: DataFrame, keys: Seq[String], recordCol: String): DataFrame =
+    erased(df).select(keys.map(col) :+
+      concat_ws(Sep, df.columns.toSeq.map(col): _*).as(recordCol): _*)
+
+  /** Compare frames [[diff]] persisted, bounded per session (oldest
+    * unpersisted on overflow — worst case a recompute). */
+  private val cacheWindow = new CacheWindows(2)
+
+  /** Drop every compare frame this module still has persisted. */
+  def releaseCaches(): Unit = cacheWindow.releaseAll()
+
+  // row states of the compare frame, in its `__state` column
+  private val State = "__state"
+  private final val Equal = 0; private final val Mismatch = 1
+  private final val SrcOnly = 2; private final val TgtOnly = 3
 
   /** Type-erased frame: every column cast to string, null→''. */
   private def erased(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).cast("string").as(c)): _*).na.fill("")
 
-  /** Target-side erased frame with every column prefixed `__t_`. */
-  private def erasedT(df: DataFrame): DataFrame = {
-    val e = erased(df)
-    e.select(df.columns.map(c => col(c).as(s"__t_$c")).toSeq: _*)
-  }
-
-  private def record(cols: Seq[String], side: Seq[String] => Seq[org.apache.spark.sql.Column]) =
-    concat_ws(Sep, side(cols): _*)
-
-  /** Rows present on both sides (by key) whose canonical records differ:
-    * keys..., Source_Record, Target_Record.
-    *
-    * Record equality over the SOH concat is equivalent to column-wise
-    * equality of the erased tuples (the separator never collides as long
-    * as data carries no SOH — the reference's own assumption), so the
-    * implementation compares columns first and builds the concatenated
-    * record strings ONLY for the mismatching rows. At 100 TB that skips
-    * string materialization for the overwhelmingly matching majority. */
-  def rowDiff(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame = {
+  /** The one full-outer join every artifact reads: keys..., `__state`,
+    * Source_Record, Target_Record. Record equality over the SOH concat is
+    * column-wise equality of the erased tuples (as long as data carries no
+    * SOH — the reference's own assumption), so the state compares columns
+    * and record strings are built ONLY for rows that are not equal. */
+  private def compare(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame = {
     val cols = source.columns.toSeq
     val s = erased(source)
-    val t = erasedT(target)
-    val joinCond = keys.map(k => s(k) === t(s"__t_$k")).reduce(_ && _)
-    val anyNeq = cols.map(c => s(c) =!= t(s"__t_$c")).reduce(_ || _)
-    s.join(t, joinCond, "inner")
-      .where(anyNeq)
-      .select(keys.map(k => s(k).as(k)) :+
-        record(cols, _.map(s(_))).as("Source_Record") :+
-        record(cols, _.map(c => t(s"__t_$c"))).as("Target_Record"): _*)
+    val t = erased(target).select(target.columns.map(c => col(c).as(s"__t_$c")).toSeq: _*)
+    def tc(c: String) = t(s"__t_$c")
+    // erased keys are never null, so a null key marks the absent side of the join
+    val state = when(tc(keys.head).isNull, SrcOnly).when(s(keys.head).isNull, TgtOnly)
+      .when(cols.map(c => s(c) =!= tc(c)).reduce(_ || _), Mismatch).otherwise(Equal)
+    val st = col(State)
+    s.join(t, keys.map(k => s(k) === tc(k)).reduce(_ && _), "full_outer")
+      .withColumn(State, state)
+      .select(keys.map(k => coalesce(s(k), tc(k)).as(k)) :+ st :+
+        when(st.isin(Mismatch, SrcOnly), concat_ws(Sep, cols.map(s(_)): _*))
+          .as("Source_Record") :+
+        // in source column order for a mismatch row, its own for a target-only one
+        when(st === Mismatch, concat_ws(Sep, cols.map(tc): _*))
+          .when(st === TgtOnly, concat_ws(Sep, target.columns.toSeq.map(tc): _*))
+          .as("Target_Record"): _*)
   }
 
-  /** Column-level mismatch explosion: keys..., source_value, target_value,
-    * mismatch_column_name — one row per differing cell. */
-  def colMismatch(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame = {
-    val colNames = source.columns.toSeq
-    rowDiff(source, target, keys)
+  /** Rows of one state: keys..., then `records`. */
+  private def rowsOf(c: DataFrame, keys: Seq[String], state: Int, records: String*): DataFrame =
+    c.where(col(State) === state).select(keys.map(col) ++ records.map(col): _*)
+
+  private def colMismatchOf(c: DataFrame, keys: Seq[String], colNames: Seq[String]): DataFrame =
+    rowsOf(c, keys, Mismatch, "Source_Record", "Target_Record")
       .select((keys.map(col) :+
         split(col("Source_Record"), Sep).as("_2") :+
         split(col("Target_Record"), Sep).as("_3")): _*)
@@ -95,57 +98,16 @@ object Reconcile {
         element_at(
           array(colNames.map(lit): _*), col("pos").cast("int") + 1
         ).as("mismatch_column_name")): _*)
-  }
 
-  /** Rows whose key exists only in source (reference's left join + null
-    * filter, `Raptor.py:619-631`; semantically a left_anti join). The
-    * record string is built only for the surviving extra rows. */
-  def srcExtra(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame = {
-    val cols = source.columns.toSeq
-    val s = erased(source)
-    val tKeys = erasedT(target.select(keys.map(col): _*))
-    val joinCond = keys.map(k => s(k) === tKeys(s"__t_$k")).reduce(_ && _)
-    s.join(tKeys, joinCond, "left")
-      .filter(tKeys(s"__t_${keys.head}").isNull)
-      .select(keys.map(k => s(k).as(k)) :+
-        record(cols, _.map(s(_))).as("Source_Record"): _*)
-  }
-
-  /** Rows whose key exists only in target (`Raptor.py:633-645`). */
-  def tgtExtra(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame = {
-    val cols = target.columns.toSeq
-    val sKeys = erased(source.select(keys.map(col): _*))
-    val t = erasedT(target)
-    val joinCond = keys.map(k => sKeys(k) === t(s"__t_$k")).reduce(_ && _)
-    sKeys.join(t, joinCond, "right")
-      .filter(sKeys(keys.head).isNull)
-      .select(keys.map(k => t(s"__t_$k").as(k)) :+
-        record(cols, _.map(c => t(s"__t_$c"))).as("Target_Record"): _*)
-  }
-
-  /** Reconciliation summary (Description, Value) — the reference's
-    * `_raptor_result_summary` counts (`Raptor.py:271-437`) computed in a
-    * single pass over one full-outer join. Presentation-layer decoration
-    * (thousands separators, system labels) is left to report renderers;
-    * the Values carry the plain counts. */
-  def summary(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame = {
-    val cols = source.columns.toSeq
-    val s = erased(source)
-    val t = erasedT(target)
-    val joinCond = keys.map(k => s(k) === t(s"__t_$k")).reduce(_ && _)
-    // post-erasure keys are never null, so a null key column marks the
-    // absent side of the full-outer join; no record strings needed at all
-    val src = s(keys.head)
-    val tgt = t(s"__t_${keys.head}")
-    val anyNeq = cols.map(c => s(c) =!= t(s"__t_$c")).reduce(_ || _)
-    s.join(t, joinCond, "full_outer")
-      .agg(
-        count(src).as("src_cnt"),
-        count(tgt).as("tgt_cnt"),
-        count(when(src.isNotNull && tgt.isNotNull, 1)).as("common_cnt"),
-        count(when(src.isNotNull && tgt.isNotNull && anyNeq, 1)).as("mismatch_cnt"),
-        count(when(tgt.isNull, 1)).as("src_extra_cnt"),
-        count(when(src.isNull, 1)).as("tgt_extra_cnt"))
+  private def summaryOf(c: DataFrame): DataFrame = {
+    val st = col(State)
+    c.agg(
+        count(when(st =!= TgtOnly, 1)).as("src_cnt"),
+        count(when(st =!= SrcOnly, 1)).as("tgt_cnt"),
+        count(when(st.isin(Equal, Mismatch), 1)).as("common_cnt"),
+        count(when(st === Mismatch, 1)).as("mismatch_cnt"),
+        count(when(st === SrcOnly, 1)).as("src_extra_cnt"),
+        count(when(st === TgtOnly, 1)).as("tgt_extra_cnt"))
       .withColumn("pct",
         when(col("common_cnt") > 0,
           concat((col("mismatch_cnt") * lit(100.0) / col("common_cnt"))
@@ -163,19 +125,9 @@ object Reconcile {
           |) as (Description, Value)""".stripMargin)
   }
 
-  /** Column-level mismatch percentage summary — the reference's
-    * `_raptor_column_summary` (`Raptor.py:441-474`): per-column mismatch
-    * count and its percentage of compared rows, ordered worst-first. The
-    * compared-row count rides along as a broadcastable one-row aggregate
-    * instead of the reference's eager `.count()`. */
-  def colSummary(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame = {
-    // keys-only inner join for the compared-row count: prunes the scan to
-    // the key columns instead of canonicalizing every column twice
-    val sk = source.select(keys.map(c => col(c).cast("string").as(c)): _*)
-    val tk = target.select(keys.map(c => col(c).cast("string").as(c)): _*)
-    val compared = sk.na.fill("").join(tk.na.fill(""), keys)
-      .agg(count(lit(1)).as("compared_cnt"))
-    colMismatch(source, target, keys)
+  private def colSummaryOf(c: DataFrame, keys: Seq[String], colNames: Seq[String]): DataFrame = {
+    val compared = c.agg(count(when(col(State).isin(Equal, Mismatch), 1)).as("compared_cnt"))
+    colMismatchOf(c, keys, colNames)
       .groupBy("mismatch_column_name")
       .agg(count(lit(1)).as("Mismatch_Record_Count_Column_Level"))
       .crossJoin(broadcast(compared))
@@ -189,6 +141,35 @@ object Reconcile {
       .drop("compared_cnt")
   }
 
+  /** Rows on both sides whose records differ: keys..., Source_Record, Target_Record. */
+  def rowDiff(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
+    rowsOf(compare(source, target, keys), keys, Mismatch, "Source_Record", "Target_Record")
+
+  /** One row per differing cell: keys..., source_value, target_value, mismatch_column_name. */
+  def colMismatch(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
+    colMismatchOf(compare(source, target, keys), keys, source.columns.toSeq)
+
+  /** Rows keyed only in source (`Raptor.py:619-631`): keys..., Source_Record. */
+  def srcExtra(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
+    rowsOf(compare(source, target, keys), keys, SrcOnly, "Source_Record")
+
+  /** Rows keyed only in target (`Raptor.py:633-645`): keys..., Target_Record. */
+  def tgtExtra(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
+    rowsOf(compare(source, target, keys), keys, TgtOnly, "Target_Record")
+
+  /** Reconciliation summary (Description, Value) — the reference's
+    * `_raptor_result_summary` counts (`Raptor.py:271-437`) as plain counts
+    * (thousands separators and labels are left to report renderers). */
+  def summary(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
+    summaryOf(compare(source, target, keys))
+
+  /** The reference's `_raptor_column_summary` (`Raptor.py:441-474`):
+    * per-column mismatch count and its percentage of compared rows,
+    * worst-first; the compared-row count is a broadcast one-row aggregate
+    * instead of the reference's eager `.count()`. */
+  def colSummary(source: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
+    colSummaryOf(compare(source, target, keys), keys, source.columns.toSeq)
+
   /** All diff artifacts of one reconciliation run, lazily (nothing
     * executes until a sink or action touches a member). */
   final case class DiffResult(rowDiff: DataFrame, colMismatch: DataFrame,
@@ -196,16 +177,21 @@ object Reconcile {
                               summary: DataFrame, colSummary: DataFrame)
 
   /** The composed operator — the Scala face of the reference's
-    * `submit_raptor_request` compare stage (`Raptor.py:536-655`). Both
-    * sides are cached before fan-out: six artifacts read them (the
-    * reference does the same, `Raptor.py:545-546`). */
+    * `submit_raptor_request` compare stage (`Raptor.py:536-655`). The
+    * compare frame is persisted once, in this module's cache window, and
+    * all six artifacts read it (the reference caches both raw sides
+    * instead, `Raptor.py:545-546`). The row-level tables [[persist]]
+    * writes are sparse filters of that frame, so they carry a rebalance:
+    * AQE sizes their files instead of every partition landing a small one. */
   def diff(source: DataFrame, target: DataFrame, keys: Seq[String]): DiffResult = {
-    val s = source.cache()
-    val t = target.cache()
+    val c = cacheWindow.add(compare(source, target, keys))
+    val cols = source.columns.toSeq
     DiffResult(
-      rowDiff(s, t, keys), colMismatch(s, t, keys),
-      srcExtra(s, t, keys), tgtExtra(s, t, keys),
-      summary(s, t, keys), colSummary(s, t, keys))
+      rowsOf(c, keys, Mismatch, "Source_Record", "Target_Record"),
+      colMismatchOf(c, keys, cols).hint("rebalance"),
+      rowsOf(c, keys, SrcOnly, "Source_Record").hint("rebalance"),
+      rowsOf(c, keys, TgtOnly, "Target_Record").hint("rebalance"),
+      summaryOf(c), colSummaryOf(c, keys, cols))
   }
 
   /** Q8 — delta-table persistence under the reference's naming convention

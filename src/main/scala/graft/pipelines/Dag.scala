@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.io.Sinks
-import graft.ops.Quality
 
 /** The reference's production DAG as plain call sequencing — SURVEY.md
   * §2.13: Airflow's task graph
@@ -10,9 +9,9 @@ import graft.ops.Quality
   * `[suppliers, products, customers] >> sales >> supplier_performance >>
   * product_performance >> customer_sales_report`)
   * reduces to ordinary function composition once every task is a pure
-  * `(SparkSession, dir) => DataFrame`. Each mart load preserves the
-  * reference's gate-then-write ordering (a duplicate-key failure means
-  * no partial load).
+  * `(SparkSession, dir) => DataFrame`. Each stage lands through
+  * [[graft.io.Sinks.land]]: its plan runs once, gate before write (a
+  * duplicate-key failure means no partial load).
   *
   * Scheduling and alerting stay with whatever runs the driver (cron,
   * Airflow's SparkSubmitOperator, …), but the RETRY/FAILURE contract the
@@ -46,18 +45,23 @@ object Dag {
   final case class TaskSkipped(name: String, failedUpstream: String) extends TaskOutcome
 
   /** One task body through its bounded retry budget → a typed outcome.
-    * Total attempts ≤ 1 + policy.retries. */
+    * Total attempts ≤ 1 + policy.retries. A final failure's cause carries
+    * the earlier attempts' exceptions as suppressed exceptions, in order. */
   private def runOne(name: String, body: () => StageResult,
                      policy: RetryPolicy): TaskOutcome = {
     var attempt = 0
     var done: Option[TaskOutcome] = None
+    val earlier = Seq.newBuilder[Throwable]
     while (done.isEmpty) {
       attempt += 1
       try done = Some(TaskSucceeded(name, body(), attempt))
       catch {
-        case scala.util.control.NonFatal(_) if attempt <= policy.retries =>
+        case scala.util.control.NonFatal(e) if attempt <= policy.retries =>
+          earlier += e
           if (policy.delayMillis > 0) Thread.sleep(policy.delayMillis)
         case scala.util.control.NonFatal(e) =>
+          // a body that rethrows one instance cannot suppress itself
+          earlier.result().distinct.filterNot(_ eq e).foreach(e.addSuppressed)
           done = Some(TaskFailed(name, attempt, e))
       }
     }
@@ -69,7 +73,7 @@ object Dag {
     * skipped — the linear-chain analog of Airflow's all-success trigger
     * rule (the reference's DAG is a linear chain after the ingest fan-in,
     * `dags/metamorph_etl_dag.py:28`). A gate failure (e.g.
-    * [[Quality.gate]]'s DuplicateException) is deterministic, so it burns
+    * [[graft.ops.Quality.gate]]'s DuplicateException) is deterministic, so it burns
     * its budget and aborts — exactly the no-partial-load behavior the
     * reference relies on. */
   def runTasks(tasks: Seq[(String, () => StageResult)],
@@ -150,13 +154,8 @@ object Dag {
   private def stages(spark: SparkSession, sfDir: String,
                      outDir: String): Seq[Seq[(String, () => StageResult)]] = {
 
-    def load(name: String, df: => DataFrame,
-             pk: Option[Seq[String]]): (String, () => StageResult) =
-      name -> { () =>
-        val gated = pk.fold(df)(Quality.gate(df, _))
-        Sinks.snapshot(gated, s"$outDir/raw/$name", s"$outDir/legacy/$name")
-        StageResult(name, gated.count(), s"$outDir/raw/$name")
-      }
+    def load(name: String, df: => DataFrame, pk: Seq[String] = Nil): (String, () => StageResult) =
+      name -> (() => land(outDir, name, df, pk))
 
     // ingestion fan-in (the reference's three parallel ingests + sales).
     // The sale grain is UNGATED by design: the driver fixture plants
@@ -165,16 +164,16 @@ object Dag {
     // this load too; the dirty grain is the fixture's dup-detection bait.
     Seq(
       Seq(
-        load("suppliers", Ingestion.suppliersSnapshot(spark, sfDir), Some(Seq("SUPPLIER_ID"))),
-        load("products", graft.model.Entities.products(spark, sfDir), Some(Seq("PRODUCT_ID"))),
-        load("customers", graft.model.Entities.customers(spark, sfDir), Some(Seq("CUSTOMER_ID")))),
-      Seq(load("sales", graft.model.Entities.sales(spark, sfDir), None)),
+        load("suppliers", Ingestion.suppliersSnapshot(spark, sfDir), Seq("SUPPLIER_ID")),
+        load("products", graft.model.Entities.products(spark, sfDir), Seq("PRODUCT_ID")),
+        load("customers", graft.model.Entities.customers(spark, sfDir), Seq("CUSTOMER_ID"))),
+      Seq(load("sales", graft.model.Entities.sales(spark, sfDir))),
       // marts, in the reference's dependency order
       Seq(load("supplier_performance", SupplierPerformance(spark, sfDir),
-        Some(Seq("SUPPLIER_ID", "DAY_DT")))),
+        Seq("SUPPLIER_ID", "DAY_DT"))),
       Seq(load("product_performance", ProductPerformance(spark, sfDir),
-        Some(Seq("PRODUCT_ID", "DAY_DT")))),
-      Seq(load("customer_sales_report", CustomerSalesReport(spark, sfDir), None)))
+        Seq("PRODUCT_ID", "DAY_DT"))),
+      Seq(load("customer_sales_report", CustomerSalesReport(spark, sfDir))))
   }
 
   /** Run the full pipeline against `sfDir`, landing every output under
@@ -198,12 +197,16 @@ object Dag {
     runTaskGroups(stages(spark, sfDir, outDir), policy)
 
   /** The reference's SECOND production DAG (`dags/usa_etl_dag.py:6-10`,
-    * one task: `usa_population_ingestion.py:20-56`) — canonicalize + gate
-    * via [[Ingestion.usaPopulation]], landed with the same raw/legacy
-    * snapshot convention as [[runAll]]'s stages. */
-  def runUsaEtl(spark: SparkSession, sfDir: String, outDir: String): StageResult = {
-    val gated = Ingestion.usaPopulationSnapshot(spark, sfDir)
-    Sinks.snapshot(gated, s"$outDir/raw/usa_population", s"$outDir/legacy/usa_population")
-    StageResult("usa_population", gated.count(), s"$outDir/raw/usa_population")
+    * one task: `usa_population_ingestion.py:20-56`) — the
+    * [[Ingestion.usaPopulation]] canonical frame, gated on its grain and
+    * landed by the same single-pass routine as [[runAll]]'s stages. */
+  def runUsaEtl(spark: SparkSession, sfDir: String, outDir: String): StageResult =
+    land(outDir, "usa_population", Ingestion.usaPopulationCanonical(spark, sfDir),
+      Ingestion.UsaPopulationKey)
+
+  /** One stage landed under `outDir`'s raw/legacy layout by [[Sinks.land]]. */
+  private def land(outDir: String, name: String, df: DataFrame, pk: Seq[String]): StageResult = {
+    val raw = s"$outDir/raw/$name"
+    StageResult(name, Sinks.land(df, raw, s"$outDir/legacy/$name", pk), raw)
   }
 }

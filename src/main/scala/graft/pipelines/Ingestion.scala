@@ -26,16 +26,14 @@ object Ingestion {
     df.toDF(names: _*).withColumn("DAY_DT", lit(dayDt))
   }
 
-  /** Full snapshot ingest: gate-then-write ordering preserved from the
-    * reference (failure ⇒ no partial load; SURVEY.md §7.5 item 5). The
-    * frame is written twice (raw overwrite + legacy append) — unlike the
-    * reference, which recomputes the lineage per action, callers at scale
-    * should persist upstream of this call if the extract is expensive. */
+  /** Full snapshot ingest through [[Sinks.land]]: the extract runs once and
+    * the reference's gate-then-write order holds (failure ⇒ no partial load;
+    * SURVEY.md §7.5 item 5). The returned frame is the lazy canonical plan —
+    * read `rawPath` rather than act on it again. */
   def snapshotIngest(df: DataFrame, names: Seq[String], primaryKey: Seq[String],
                      rawPath: String, legacyPath: String): DataFrame = {
     val canonical = canonicalize(df, names)
-    Quality.gate(canonical, primaryKey)
-    Sinks.snapshot(canonical, rawPath, legacyPath)
+    Sinks.land(canonical, rawPath, legacyPath, primaryKey)
     canonical
   }
 
@@ -47,30 +45,29 @@ object Ingestion {
     * reference's REST fetch and JDBC write are the I/O edges
     * ([[graft.io.Rest]] / [[graft.io.Sinks]]); this is the engine middle
     * they sandwich. */
-  def usaPopulation(raw: DataFrame): DataFrame = {
-    val canonical = raw.selectExpr(
-      "`ID Nation` as ID_NATION",
-      "`Nation` as NATION",
-      "`ID Year` as ID_YEAR",
-      "`Year` as YEAR",
-      "`Population` as POPULATION",
-      "`Slug Nation` as SLUG_NATION")
-    Quality.gate(canonical, Seq("ID_NATION", "ID_YEAR"))
-  }
+  def usaPopulation(raw: DataFrame): DataFrame = Quality.gate(usaRename(raw), UsaPopulationKey)
+  private[graft] val UsaPopulationKey = Seq("ID_NATION", "ID_YEAR")
+
+  private def usaRename(raw: DataFrame): DataFrame = raw.selectExpr(
+    "`ID Nation` as ID_NATION", "`Nation` as NATION", "`ID Year` as ID_YEAR",
+    "`Year` as YEAR", "`Population` as POPULATION", "`Slug Nation` as SLUG_NATION")
 
   /** Driver-facing query: the API payload shape derived deterministically
     * from the `nation` fixture (the sandbox has no egress), pushed through
     * the same canonicalize-and-gate flow. */
-  def usaPopulationSnapshot(spark: SparkSession, dir: String): DataFrame = {
+  def usaPopulationSnapshot(spark: SparkSession, dir: String): DataFrame =
+    Quality.gate(usaPopulationCanonical(spark, dir), UsaPopulationKey)
+
+  /** [[usaPopulationSnapshot]] before its gate, for [[Dag.runUsaEtl]]'s landing. */
+  private[graft] def usaPopulationCanonical(spark: SparkSession, dir: String): DataFrame = {
     val n = Entities.read(spark, dir, "nation")
-    val raw = n.select(
+    usaRename(n.select(
       col("n_nationkey").as("ID Nation"),
       col("n_name").as("Nation"),
       (lit(2020) + col("n_nationkey") % 3).cast("int").as("ID Year"),
       (lit(2020) + col("n_nationkey") % 3).cast("string").as("Year"),
       (lit(1000000L) + col("n_nationkey").cast("long") * 12345L).as("Population"),
-      lower(col("n_name")).as("Slug Nation"))
-    usaPopulation(raw)
+      lower(col("n_name")).as("Slug Nation")))
   }
 
   val usaPopulationOracle: String =

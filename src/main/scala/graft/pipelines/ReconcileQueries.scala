@@ -52,23 +52,11 @@ object ReconcileQueries {
     perturbed.unionAll(extras)
   }
 
-  def rowDiff(spark: SparkSession, dir: String): DataFrame =
-    Reconcile.rowDiff(source(spark, dir), target(spark, dir), Keys)
-
-  def colMismatch(spark: SparkSession, dir: String): DataFrame =
-    Reconcile.colMismatch(source(spark, dir), target(spark, dir), Keys)
-
-  def srcExtra(spark: SparkSession, dir: String): DataFrame =
-    Reconcile.srcExtra(source(spark, dir), target(spark, dir), Keys)
-
-  def tgtExtra(spark: SparkSession, dir: String): DataFrame =
-    Reconcile.tgtExtra(source(spark, dir), target(spark, dir), Keys)
-
-  def summary(spark: SparkSession, dir: String): DataFrame =
-    Reconcile.summary(source(spark, dir), target(spark, dir), Keys)
-
-  def colSummary(spark: SparkSession, dir: String): DataFrame =
-    Reconcile.colSummary(source(spark, dir), target(spark, dir), Keys)
+  /** A registry cell: `op` (one of the [[Reconcile]] artifacts) over this
+    * source/target pair. */
+  def cell(op: (DataFrame, DataFrame, Seq[String]) => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (spark, dir) => op(source(spark, dir), target(spark, dir), Keys)
 
   /** Shared oracle CTEs: perturbation + canonical records on both sides. */
   private val baseCtes: String =

@@ -40,6 +40,17 @@ class CacheWindowsSpec extends SparkSpec {
     assert(bs.drop(3).forall(_.storageLevel == StorageLevel.NONE))
   }
 
+  test("a frame uncached behind the window's back is persisted again on re-add") {
+    val w = new CacheWindows(2)
+    w.add(frame(spark, 30)).count()
+    frame(spark, 30).unpersist(blocking = true) // e.g. catalog.clearCache()
+    val again = w.add(frame(spark, 30))
+    assert(again.storageLevel != StorageLevel.NONE)
+    assert(w.registered(spark).size == 1, "one plan, one slot")
+    w.releaseAll()
+    assert(again.storageLevel == StorageLevel.NONE)
+  }
+
   test("dedup shingle caches from one session survive another's sweep") {
     import spark.implicits._
     val s1 = spark.newSession()

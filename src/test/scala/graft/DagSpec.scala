@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import graft.pipelines.Dag
 
 class DagSpec extends SparkSpec {
@@ -171,5 +172,52 @@ class DagSpec extends SparkSpec {
     val ex = Dag.DagTaskException("only", failed.attempts, failed.cause)
     assert(ex.getMessage == "task 'only' failed after 1 attempt(s)")
     assert(ex.getCause.getMessage == "nope")
+  }
+
+  test("a task failing three times keeps every attempt's cause") {
+    var calls = 0
+    val out = Dag.runTasks(Seq("flaky" -> { () =>
+      calls += 1
+      sys.error(s"failure $calls")
+    }), Dag.RetryPolicy(retries = 2))
+    out match {
+      case Seq(Dag.TaskFailed("flaky", 3, cause)) =>
+        assert(cause.getMessage == "failure 3")
+        assert(cause.getSuppressed.map(_.getMessage).toSeq == Seq("failure 1", "failure 2"))
+      case other => fail(s"unexpected outcomes: $other")
+    }
+  }
+
+  private def children(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).map(_.toSeq.sorted).getOrElse(Nil)
+
+  private def contents(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  test("a failed landing leaves the previous raw and legacy in place") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft_dag_fail_").toString
+    val (raw, legacy) = (s"$out/raw/suppliers", s"$out/legacy/suppliers")
+    def land(df: => org.apache.spark.sql.DataFrame) = Dag.runTasks(Seq("suppliers" -> { () =>
+      Dag.StageResult("suppliers", graft.io.Sinks.land(df, raw, legacy, Seq("SUPPLIER_ID")), raw)
+    }), Dag.RetryPolicy(retries = 0)).head
+    assert(land(Seq((1, "a"), (2, "b")).toDF("SUPPLIER_ID", "NAME")) ==
+      Dag.TaskSucceeded("suppliers", Dag.StageResult("suppliers", 2L, raw), 1))
+    val (rawBefore, legacyBefore) = (contents(raw), contents(legacy))
+
+    // a duplicate key: the gate fails after the staged write, before publish
+    land(Seq((3, "c"), (3, "d")).toDF("SUPPLIER_ID", "NAME")) match {
+      case Dag.TaskFailed(_, _, cause) => assert(cause.isInstanceOf[graft.ops.DuplicateException])
+      case other => fail(s"dup gate did not fail the task: $other")
+    }
+    assert(contents(raw) == rawBefore && contents(legacy) == legacyBefore)
+    assert(children(s"$out/raw") == Seq("suppliers"), "no staging dir left behind")
+
+    // a frame that fails mid-write: the previous raw stays readable
+    val failing = Seq((4, "e"), (5, "f")).toDF("SUPPLIER_ID", "NAME")
+      .withColumn("NAME", when($"SUPPLIER_ID" === 5, raise_error(lit("bad row"))).otherwise($"NAME"))
+    assert(land(failing).isInstanceOf[Dag.TaskFailed])
+    assert(contents(raw) == rawBefore && contents(legacy) == legacyBefore)
+    assert(children(s"$out/raw") == Seq("suppliers"), "no staging dir left behind")
   }
 }

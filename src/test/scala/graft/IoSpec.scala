@@ -140,6 +140,40 @@ class IoSpec extends SparkSpec {
     assert(spark.read.parquet(s"$d/legacy").count() == 2)   // accumulated
   }
 
+  /** Land two days, then a duplicate-key day and a day that fails
+    * mid-write, under `base` (any scheme): the ledger holds the two good
+    * days, raw the second, and no staging directory survives. */
+  private def landingRoundTrip(base: String): Unit = {
+    val (raw, legacy) = (s"$base/raw/t", s"$base/legacy/t")
+    def day(ids: Int*) = ids.map(i => (i, s"v$i")).toDF("id", "v")
+    assert(Sinks.land(day(1, 2), raw, legacy, Seq("id")) == 2)
+    assert(Sinks.land(day(3), raw, legacy, Seq("id")) == 1)
+    def state = (spark.read.parquet(raw).as[(Int, String)].collect().toSet,
+      spark.read.parquet(legacy).count())
+    assert(state == (Set((3, "v3")), 3L))
+    assertThrows[DuplicateException](Sinks.land(day(4, 4), raw, legacy, Seq("id")))
+    assert(state == (Set((3, "v3")), 3L))
+    val failing = day(5, 6).withColumn("v",
+      when($"id" === 6, raise_error(lit("bad row"))).otherwise($"v"))
+    intercept[Exception](Sinks.land(failing, raw, legacy))
+    assert(state == (Set((3, "v3")), 3L), "previous raw still readable after a failed write")
+    val parent = new org.apache.hadoop.fs.Path(s"$base/raw")
+    val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(parent).map(_.getPath.getName).toSeq == Seq("t"),
+      "no staging dir left behind")
+  }
+
+  test("land: single-pass gate + snapshot + count; failures leave raw and legacy") {
+    landingRoundTrip(Files.createTempDirectory("graft_land").toUri.toString.stripSuffix("/"))
+  }
+
+  test("land: the same round-trip over a custom-scheme FileSystem") {
+    import graft.io.RamFs
+    Sources.configureFs(spark, Map("fs.ramfs.impl" -> classOf[RamFs].getName))
+    landingRoundTrip(s"ramfs:${RamFs.root}/landing")
+    assert(new java.io.File(RamFs.root, "landing/raw/t").isDirectory)
+  }
+
   test("jsonl roundtrip preserves rows and declared schema avoids inference") {
     val d = Files.createTempDirectory("graft_jsonl").toString
     val docs = Seq((1L, "hello world", "en"), (2L, "hallo welt", "de"))

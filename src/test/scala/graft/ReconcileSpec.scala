@@ -220,4 +220,94 @@ class ReconcileSpec extends SparkSpec {
     assert(diff.length == 1)
     assert(diff.head.getAs[String]("mismatch_column_name") == "v")
   }
+
+  private val Cols = Seq("k1", "k2", "a", "b")
+  private type Row4 = (Int, String, Option[String], Option[Int])
+
+  /** Seeded pair on the composite key (k1, k2): every row is equal,
+    * mismatched, source-only or target-only; nulls and '' are mixed in
+    * on both sides, and an equal row may swap one for the other. */
+  private def pair(seed: Long): (Seq[Row4], Seq[Row4]) = {
+    val rng = new scala.util.Random(seed)
+    val texts = Seq(Some("x"), Some("y"), Some(""), None)
+    def text() = texts(rng.nextInt(texts.size))
+    def num() = if (rng.nextInt(4) == 0) None else Some(rng.nextInt(5))
+    val rows = (0 until 320).map { i =>
+      val s: Row4 = (i % 16, s"g${i / 16}", text(), num())
+      val blank = s._3.getOrElse("").isEmpty
+      rng.nextInt(4) match {
+        case 0 => (Some(s), Some(if (blank) s.copy(_3 = if (s._3.isEmpty) Some("") else None) else s))
+        case 1 =>
+          val t = if (rng.nextBoolean()) s.copy(_3 = Some(s._3.getOrElse("") + "!"))
+                  else s.copy(_4 = Some(s._4.getOrElse(0) + 10))
+          (Some(s), Some(if (rng.nextBoolean()) t.copy(_4 = Some(t._4.getOrElse(0) + 20)) else t))
+        case 2 => (Some(s), None)
+        case _ => (None, Some(s))
+      }
+    }
+    (rows.flatMap(_._1), rows.flatMap(_._2))
+  }
+
+  private def erase(r: Row4): Seq[String] =
+    Seq(r._1.toString, r._2, r._3.getOrElse(""), r._4.map(_.toString).getOrElse(""))
+
+  private def pct(n: Long, of: Long): String =
+    BigDecimal(n * 100.0 / of).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString + "%"
+
+  test("all six artifacts match a collections reference over four row states") {
+    val (src, tgt) = pair(11L)
+    val keys = Seq("k1", "k2")
+    val d = Reconcile.diff(src.toDF(Cols: _*), tgt.toDF(Cols: _*), keys)
+
+    val s = src.map(r => erase(r).take(2) -> erase(r)).toMap
+    val t = tgt.map(r => erase(r).take(2) -> erase(r)).toMap
+    val common = s.keySet.intersect(t.keySet)
+    val mismatched = common.filter(k => s(k) != t(k))
+    val rec = (v: Seq[String]) => v.mkString(Reconcile.Sep)
+    // the data really spans every state, including null-vs-'' equal rows
+    assert(mismatched.nonEmpty && (common -- mismatched).nonEmpty)
+    assert((s.keySet -- t.keySet).nonEmpty && (t.keySet -- s.keySet).nonEmpty)
+    assert((common -- mismatched).exists(k =>
+      src.exists(r => erase(r).take(2) == k && r._3.isEmpty) &&
+        tgt.exists(r => erase(r).take(2) == k && r._3.contains(""))))
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(v => if (v == null) null else v.toString)).toSet
+    assert(rows(d.rowDiff) == mismatched.map(k => k ++ Seq(rec(s(k)), rec(t(k)))))
+    assert(rows(d.colMismatch) == mismatched.flatMap(k =>
+      Cols.indices.filter(i => s(k)(i) != t(k)(i)).map(i => k ++ Seq(s(k)(i), t(k)(i), Cols(i)))))
+    assert(rows(d.srcExtra) == (s.keySet -- t.keySet).map(k => k :+ rec(s(k))))
+    assert(rows(d.tgtExtra) == (t.keySet -- s.keySet).map(k => k :+ rec(t(k))))
+    assert(d.summary.collect().map(r => r.getString(0) -> r.getString(1)).toMap == Map(
+      "Number of rows in Source" -> s.size.toString,
+      "Number of rows in Target" -> t.size.toString,
+      "Number of rows in common" -> common.size.toString,
+      "Number of rows mismatch" -> mismatched.size.toString,
+      "Row Mismatch Percentage" -> pct(mismatched.size, common.size),
+      "Number of rows in Source but not in Target" -> (s.size - common.size).toString,
+      "Number of rows in Target but not in Source" -> (t.size - common.size).toString))
+    val perCol = Cols.indices.map(i => Cols(i) -> mismatched.count(k => s(k)(i) != t(k)(i)).toLong)
+      .filter(_._2 > 0)
+      .sortBy { case (c, n) => (-n, c) }
+    assert(d.colSummary.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
+      perCol.map { case (c, n) => (c, n, pct(n, common.size)) })
+    Reconcile.releaseCaches()
+  }
+
+  test("releaseCaches drops everything diff persisted") {
+    val (src, tgt) = pair(12L)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keys.toSet
+    val d = Reconcile.diff(src.toDF(Cols: _*), tgt.toDF(Cols: _*), Seq("k1", "k2"))
+    d.summary.collect()
+    d.colSummary.collect()
+    val persisted = sc.getPersistentRDDs.keys.toSet -- before
+    assert(persisted.nonEmpty, "diff persists its compare frame")
+    Reconcile.releaseCaches()
+    assert(sc.getPersistentRDDs.keys.toSet.intersect(persisted).isEmpty)
+    // the artifacts still answer after a release: recomputed, not stale
+    assert(d.rowDiff.count() == Reconcile.rowDiff(
+      src.toDF(Cols: _*), tgt.toDF(Cols: _*), Seq("k1", "k2")).count())
+    Reconcile.releaseCaches()
+  }
 }
