@@ -14,7 +14,8 @@ and a run whose result is already there is not repeated, so an interrupted
 series resumes where it stopped.
 
 For each workload and end-to-end metric of BENCHMARK.json it prints each
-side's median and quartiles, and in how many pairs the change was better.
+side's median and quartiles, and in how many pairs the change was better;
+`--out/summary-<workloads>.json` holds every run's value.
 """
 import argparse
 import json
@@ -101,7 +102,8 @@ def main():
                                            "base_q": qb, "change_q": qc}
             print(f"  {name:18s} {qb[1]:10.2f} [{qb[0]:7.2f}, {qb[2]:7.2f}] "
                   f"{qc[1]:10.2f} [{qc[0]:7.2f}, {qc[2]:7.2f}]  {wins}/{len(b)}")
-    (args.out / "summary.json").write_text(json.dumps(report, indent=1))
+    (args.out / f"summary-{'-'.join(args.workload)}.json").write_text(
+        json.dumps(report, indent=1))
     return 0
 
 

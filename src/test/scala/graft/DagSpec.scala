@@ -213,9 +213,11 @@ class DagSpec extends SparkSpec {
     assert(contents(raw) == rawBefore && contents(legacy) == legacyBefore)
     assert(children(s"$out/raw") == Seq("suppliers"), "no staging dir left behind")
 
-    // a frame that fails mid-write: the previous raw stays readable
-    val failing = Seq((4, "e"), (5, "f")).toDF("SUPPLIER_ID", "NAME")
-      .withColumn("NAME", when($"SUPPLIER_ID" === 5, raise_error(lit("bad row"))).otherwise($"NAME"))
+    // a frame that fails mid-write (a range, not a local relation, so the
+    // error is raised by the write job, not folded away while planning):
+    // the previous raw stays readable
+    val failing = spark.range(4, 6).select($"id".cast("int").as("SUPPLIER_ID"),
+      when($"id" === 5, raise_error(lit("bad row"))).otherwise(lit("e")).as("NAME"))
     assert(land(failing).isInstanceOf[Dag.TaskFailed])
     assert(contents(raw) == rawBefore && contents(legacy) == legacyBefore)
     assert(children(s"$out/raw") == Seq("suppliers"), "no staging dir left behind")
